@@ -14,6 +14,12 @@ def release_intermediates(df: DataFrame) -> None:
     frames are recorded on the returned DataFrame as `_ocr_persisted`
     by the operator that created them.
 
+    A released frame, and every frame derived from it, must never be
+    acted on again: a localCheckpoint leaf cannot be recomputed once
+    its blocks are freed, so the action fails on a missing block, and
+    an unpersisted cache silently re-runs its whole subtree. Write or
+    collect everything you need from `df` first, then release.
+
     Why callers own this: the operators return LAZY frames, so the
     operator itself can never know when the caches stop being needed —
     and in a long-lived session (the driver evaluates 50+ queries in

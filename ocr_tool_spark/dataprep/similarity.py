@@ -169,9 +169,14 @@ def srp_signatures(
             # flatten() honors offsets/slices, so no O(n·dim) Python
             # objects ever materialize. Nulls/ragged rows violate the
             # embedding contract and fail loudly instead of silently
-            # taking a 100× slower object path.
+            # taking a 100× slower object path. The length check is per
+            # row: a 2·dim row next to an empty one passes a total-length
+            # check and would reshape into two wrong vectors.
             flat = vecs.flatten()
-            if n and (vecs.null_count or len(flat) != n * dim):
+            if n and (
+                vecs.null_count
+                or (np.diff(vecs.offsets.to_numpy()) != dim).any()
+            ):
                 raise ValueError(
                     f"{vec_col} must be non-null fixed-dim({dim}) vectors"
                 )

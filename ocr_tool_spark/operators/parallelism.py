@@ -22,6 +22,10 @@ scan's input files (local paths); for remote filesystems the file
 COUNT is used as the lower-bound estimate — at 100 TB the file count
 alone exceeds any core count, so the floor repartition correctly never
 fires at scale.
+
+The same metadata sizes Python stages by their work
+(`work_sized_partitions`): the OCR stage reads its pixel bytes from the
+media table's parquet footers (`parquet_column_bytes`).
 """
 
 from __future__ import annotations
@@ -29,6 +33,8 @@ from __future__ import annotations
 import math
 import os
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame
 
 _SUFFIX = {"b": 1, "k": 1 << 10, "m": 1 << 20, "g": 1 << 30, "t": 1 << 40}
@@ -89,6 +95,49 @@ def scan_input_bytes(df: DataFrame) -> int | None:
         if f.startswith("file:") and os.path.exists(local):
             total += os.path.getsize(local)
     return total
+
+
+def parquet_column_bytes(df: DataFrame, column: str) -> int | None:
+    """Uncompressed bytes of top-level `column` across df's input files,
+    summed from the parquet footers (`total_uncompressed_size` per row
+    group). Driver-side metadata only, like the split estimate. None
+    when any input file is not a local parquet file carrying `column`
+    (in-memory frame, remote FS, other formats): the caller falls back
+    to its fixed sizing rather than guess."""
+    files = df.inputFiles()
+    if not files:
+        return None
+    total = 0
+    for f in files:
+        local = f.removeprefix("file:")
+        if not (f.startswith("file:") and os.path.exists(local)):
+            return None
+        try:
+            meta = pq.read_metadata(local)
+        except (OSError, pa.ArrowException):  # unreadable or not parquet
+            return None
+        leaves = [meta.schema.column(i).path for i in range(meta.num_columns)]
+        if column not in leaves:
+            return None
+        i = leaves.index(column)
+        total += sum(
+            meta.row_group(g).column(i).total_uncompressed_size
+            for g in range(meta.num_row_groups)
+        )
+    return total
+
+
+def work_sized_partitions(work_bytes: int | None, bytes_per_task: int, par: int) -> int:
+    """Task count for a Python stage whose cost scales with work_bytes:
+    one task per bytes_per_task, clamped to [par, 8*par]. Every Python
+    task pays a fixed ~0.25 core-s worker set-up (pyspark's per-task
+    importlib.invalidate_caches() makes each zipimporter re-read
+    pyspark.zip), so a small stage cut into 8*par tasks spends most of
+    its time on set-up. par keeps every core busy; 8*par keeps the
+    straggler tail short at scale. None (work unknown) -> 8*par."""
+    if work_bytes is None:
+        return 8 * par
+    return min(8 * par, max(par, math.ceil(work_bytes / bytes_per_task)))
 
 
 def ensure_parallelism_floor(

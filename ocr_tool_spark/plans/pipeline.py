@@ -37,37 +37,32 @@ from pyspark.sql import functions as F
 from ocr_tool_spark.constants import KIND_MEDIA, KIND_TEXT, OCR_PAGE_JOIN
 from ocr_tool_spark.functions.html import with_main_text
 from ocr_tool_spark.functions.ocr import ocr_media_udf
+from ocr_tool_spark.operators.parallelism import (
+    parquet_column_bytes,
+    work_sized_partitions,
+)
 from ocr_tool_spark.operators.spans import explode_spans, reassemble, route
 
+# page pixels per OCR task: at the measured kernel rate a task of this
+# size runs long enough that the fixed per-task cost stays under ~10 %
+OCR_BYTES_PER_TASK = 256 << 20
 
-def ocr_referenced_media(
-    media_spans: DataFrame, media_store: DataFrame, per_page: bool = True
-) -> DataFrame:
+
+def ocr_referenced_media(media_spans: DataFrame, media_store: DataFrame) -> DataFrame:
     """-> (media_ref, text, ocr_ms): one OCR invocation per distinct
     referenced media payload.
 
-    per_page=True explodes multi-page payloads into one row per page
-    BEFORE the Python stage (JVM-side binary slicing), so the OCR work
-    unit is a page, not a whole PDF: a 5-page scan no longer holds a
-    task slot 5x longer than its peers (the straggler tail of the OCR
-    stage is the dominant skew at scale). Page texts are re-joined per
-    payload by a small-text shuffle; ocr_ms is the summed page cost so
-    lineage percentiles keep meaning.
+    Multi-page payloads are exploded into one row per page BEFORE the
+    Python stage (JVM-side binary slicing), so the OCR work unit is a
+    page, not a whole PDF: a 5-page scan no longer holds a task slot 5x
+    longer than its peers (the straggler tail of the OCR stage is the
+    dominant skew at scale). Page texts are re-joined per payload by a
+    small-text shuffle; ocr_ms is the summed page cost so lineage
+    percentiles keep meaning.
     """
     refs = media_spans.select("media_ref").distinct()
     needed = media_store.join(refs, "media_ref", "left_semi")
     res = F.col("_ocr")
-    if not per_page:
-        return (
-            needed.withColumn(
-                "_ocr", ocr_media_udf("bitmap", "width", "height", "n_pages")
-            )
-            .select(
-                "media_ref",
-                res["text"].alias("text"),
-                res["ocr_ms"].alias("ocr_ms"),
-            )
-        )
     # n_pages <= 0 (empty/malformed media) must degrade to "" like the
     # single-call read_media path — without the guard, sequence(0, -1)
     # yields a descending [0,-1] and the UDF reshape crashes the job
@@ -82,21 +77,22 @@ def ocr_referenced_media(
             )
         ).alias("page_idx", "page"),
     )
-    # OCR-stage task granularity: AQE coalesces the upstream semi-join
-    # output by BYTE size, but OCR cost-per-byte is ~1000x the rest of
-    # the plan, so byte-balanced partitions under-parallelize the most
-    # expensive stage (measured: 11 coalesced tasks on 8 cores with a
-    # 38 s straggler -> stage util 0.77). Round-robin the exploded
-    # pages to 8x parallelism UNCONDITIONALLY: the old
-    # .rdd.getNumPartitions() probe forced AQE to materialize the
-    # semi-join's query stages at plan-construction time — the shuffle
-    # ran once for the probe and again for the real action (ADVICE r3,
-    # medium) — and AQE coalescing meant the repartition fired anyway.
-    # 8*cores work units is the right OCR granularity at every scale;
-    # the shuffle it costs is the page frame itself, which the OCR
-    # stage dwarfs ~1000x.
+    # OCR-stage task count, sized by page work: AQE coalesces the
+    # semi-join output by BYTE size, but OCR cost-per-byte is ~1000x the
+    # rest of the plan, so the pages are round-robined to an explicit
+    # count from static metadata (an .rdd probe would make AQE run the
+    # semi-join's shuffle twice). OCR cost scales with pixels, so the
+    # count is the store's bitmap bytes / OCR_BYTES_PER_TASK, clamped to
+    # [cores, 8*cores] (work_sized_partitions). A fixed 8*cores spent
+    # ~3.5 s of a 3.9 s OCR stage on per-task Python set-up for 81 pages
+    # on 4 cores; ~17 GB of pixels (300k docs) still gets 8*cores on up
+    # to 8 cores, the straggler fix. A store without local parquet
+    # footers (in-memory frame, remote FS) keeps 8*cores.
     par = media_spans.sparkSession.sparkContext.defaultParallelism
-    pages = pages.repartition(8 * par)
+    bitmap_bytes = parquet_column_bytes(media_store, "bitmap")
+    pages = pages.repartition(
+        work_sized_partitions(bitmap_bytes, OCR_BYTES_PER_TASK, par)
+    )
     per = pages.withColumn(
         "_ocr", ocr_media_udf("page", "width", "height", F.lit(1))
     ).select(

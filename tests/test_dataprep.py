@@ -660,6 +660,18 @@ def test_srp_signatures_zero_copy_and_contract_guard(spark):
         similarity.srp_signatures(bad, dim=2).collect()
 
 
+def test_srp_signatures_rejects_ragged_rows_with_right_total(spark):
+    """ADVICE r5: a 2·dim row plus an empty row in ONE Arrow batch has
+    the total length of valid vectors; only a per-row length check
+    catches it (coalesce(1) keeps the rows in one batch)."""
+    bad = spark.createDataFrame(
+        [(0, [1.0, 2.0]), (1, [1.0, 2.0, 3.0, 4.0]), (2, [])],
+        "vec_id long, embedding array<float>",
+    ).coalesce(1)
+    with pytest.raises(Exception, match="non-null fixed-dim"):
+        similarity.srp_signatures(bad, dim=2).collect()
+
+
 def test_shingle_hash_sets_vectorized_distinct_matches_spec(spark):
     """VERDICT r4 wrong #4: the vectorized (lexsort + first-occurrence)
     per-doc distinct must match the plain-Python spec exactly — sorted

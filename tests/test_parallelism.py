@@ -5,13 +5,18 @@ decided, without building an RDD plan or materializing AQE stages
 
 from __future__ import annotations
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
 
 from ocr_tool_spark.operators.parallelism import (
     ensure_parallelism_floor,
     estimated_scan_splits,
+    parquet_column_bytes,
     parse_bytes,
+    work_sized_partitions,
 )
+from ocr_tool_spark.plans.pipeline import OCR_BYTES_PER_TASK
 
 
 def test_parse_bytes_spark_forms():
@@ -66,3 +71,41 @@ def test_floor_noop_when_scan_is_wide(spark, sf_dir_mid):
     assert est is not None
     target = max(1, est // 2)
     assert ensure_parallelism_floor(df, target) is df
+
+
+def test_work_sized_partitions_clamp():
+    """The OCR task count: one task per OCR_BYTES_PER_TASK of pixels,
+    never fewer than the cores, never more than 8x them; unknown work
+    keeps 8x."""
+    b, par = OCR_BYTES_PER_TASK, 4
+    assert work_sized_partitions(0, b, par) == par
+    assert work_sized_partitions(3 << 20, b, par) == par
+    assert work_sized_partitions(6 * b + 1, b, par) == 7
+    assert work_sized_partitions(8 * par * b, b, par) == 8 * par
+    assert work_sized_partitions(17 << 30, b, par) == 8 * par
+    assert work_sized_partitions(None, b, par) == 8 * par
+
+
+def test_parquet_column_bytes_sums_footers(spark, tmp_path):
+    """The estimate is the footers' uncompressed column size over every
+    file and row group; a column the footers lack, a non-parquet scan
+    and an in-memory frame give None."""
+    pdir, cdir = tmp_path / "pq", tmp_path / "csv"
+    pdir.mkdir()
+    cdir.mkdir()
+    tbl = pa.table({"k": list(range(6)), "bitmap": [bytes(1000 * i) for i in range(6)]})
+    pq.write_table(tbl.slice(0, 3), pdir / "a.parquet", row_group_size=2)
+    pq.write_table(tbl.slice(3), pdir / "b.parquet")
+    (cdir / "a.csv").write_text("k,bitmap\n1,x\n")
+    want = 0
+    for name in ("a.parquet", "b.parquet"):
+        meta = pq.read_metadata(pdir / name)
+        want += sum(meta.row_group(g).column(1).total_uncompressed_size
+                    for g in range(meta.num_row_groups))
+    df = spark.read.parquet(str(pdir))
+    got = parquet_column_bytes(df, "bitmap")
+    assert got == want and got >= sum(1000 * i for i in range(6))
+    assert parquet_column_bytes(df, "missing") is None
+    csv = spark.read.option("header", True).csv(str(cdir))
+    assert parquet_column_bytes(csv, "bitmap") is None
+    assert parquet_column_bytes(spark.createDataFrame([(1,)], "k long"), "k") is None

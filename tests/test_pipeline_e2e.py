@@ -5,13 +5,24 @@ gate (pass rate = 100%) plus the metamorphic properties."""
 
 from __future__ import annotations
 
+import re
+
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
+from pyspark.sql.pandas.types import to_arrow_schema
 
 import refspec
 from ocr_tool_spark import fixtures
 from ocr_tool_spark.operators.equality import mismatches, pass_rate
-from ocr_tool_spark.operators.spans import explode_spans, reassemble
-from ocr_tool_spark.plans.pipeline import extract_documents
+from ocr_tool_spark.operators.parallelism import parquet_column_bytes
+from ocr_tool_spark.operators.spans import explode_spans, reassemble, route
+from ocr_tool_spark.plans.pipeline import (
+    OCR_BYTES_PER_TASK,
+    extract_documents,
+    ocr_referenced_media,
+)
+from ocr_tool_spark.sources.schemas import MEDIA_STORE
 from ocr_tool_spark.sources.tables import docs_df, media_df
 
 N_DOCS = 300
@@ -89,3 +100,53 @@ def test_zero_page_media_degrades_to_empty_text(spark):
     assert (span.kind, span.text, span.media_ref, span.offset) == (
         "media", "", "img:zero", 0
     )
+
+
+def _round_robin_counts(df) -> set[int]:
+    plan = df._jdf.queryExecution().executedPlan().toString()  # noqa: SLF001
+    return {int(n) for n in re.findall(r"RoundRobinPartitioning\((\d+)\)", plan)}
+
+
+@pytest.fixture(scope="module")
+def media_parquet(corpus, tmp_path_factory):
+    """The corpus media table as parquet in two files, written with
+    pyarrow so the OCR stage is sized from real footers."""
+    _, media, _ = corpus
+    out = tmp_path_factory.mktemp("media")
+    tbl = pa.Table.from_pylist(media, schema=to_arrow_schema(MEDIA_STORE))
+    half = tbl.num_rows // 2
+    pq.write_table(tbl.slice(0, half), out / "part-0.parquet")
+    pq.write_table(tbl.slice(half), out / "part-1.parquet")
+    return str(out)
+
+
+def test_footer_sized_ocr_stage_span_equality(spark, corpus, media_parquet):
+    """A parquet-backed media store takes the footer-estimated path: a
+    small bitmap column gets one OCR task per core, and the spans still
+    equal the reference spec exactly."""
+    docs, _, expected = corpus
+    media = spark.read.parquet(media_parquet)
+    par = spark.sparkContext.defaultParallelism
+    assert 0 < parquet_column_bytes(media, "bitmap") < OCR_BYTES_PER_TASK
+    out = extract_documents(docs_df(spark, docs), media)
+    got = {
+        r.doc_id: [(s.kind, s.text, s.media_ref, s.offset) for s in r.spans]
+        for r in out.collect()
+    }
+    want = {
+        d["doc_id"]: [(s["kind"], s["text"], s["media_ref"], s["offset"])
+                      for s in d["spans"]]
+        for d in expected
+    }
+    assert got == want
+    assert _round_robin_counts(out) == {par}
+
+
+def test_in_memory_media_store_keeps_8x_cores(spark, corpus):
+    """Without parquet footers the OCR stage keeps 8*cores tasks."""
+    docs, media, _ = corpus
+    store = media_df(spark, media)
+    par = spark.sparkContext.defaultParallelism
+    assert parquet_column_bytes(store, "bitmap") is None
+    _, media_spans = route(explode_spans(docs_df(spark, docs)))
+    assert _round_robin_counts(ocr_referenced_media(media_spans, store)) == {8 * par}
