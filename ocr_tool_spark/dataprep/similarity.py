@@ -3,8 +3,8 @@
 Baseline: brute-force cosine top-k — native `aggregate`/`zip_with`
 expressions, so the dot products run JVM-side inside codegen (no
 Python). The 100 TB path: random-hyperplane LSH bucketing so each probe
-only scans its bucket; hyperplanes are derived deterministically from
-xxhash64 so signatures are reproducible with no stored model. Brute
+only scans its bucket; hyperplanes are drawn from a seeded generator so
+signatures are reproducible with no stored model. Brute
 force stays the ground truth the LSH variant is recall-tested against
 (tests/test_dataprep.py).
 
@@ -21,6 +21,8 @@ from __future__ import annotations
 from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+
+from ocr_tool_spark.dataprep.dedup import bucket_pairs
 
 
 def _f8(c: Column) -> Column:
@@ -89,38 +91,6 @@ def brute_topk(
     )
 
 
-def hyperplane_signature(vec: Column, dim: int, n_bits: int = 16, seed: int = 7) -> Column:
-    """Random-hyperplane (SRP) signature: bit_j = [vec · h_j > 0], with
-    h_j's components drawn deterministically from xxhash64(seed, j, i)
-    mapped to {-1..1} — a 2-universal stand-in for Gaussians that
-    preserves the cosine-LSH property in practice.
-
-    NOTE: pure-expression reference implementation. The production
-    paths (lsh_topk, near_dup_pairs) use srp_signatures — the
-    n_tables × n_bits × dim literal expression tree built here costs
-    ~20 s of Catalyst compile time per query, dwarfing execution."""
-    def comp(j: int, i: int) -> Column:
-        h = F.xxhash64(F.lit(seed), F.lit(j), F.lit(i))
-        return (F.pmod(h, F.lit(2001)) - 1000).cast("double") / 1000.0
-
-    def bit(j: int) -> Column:
-        d = F.aggregate(
-            F.zip_with(
-                _f8(vec),
-                F.array(*[comp(j, i) for i in range(dim)]),
-                lambda x, y: x * y,
-            ),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-        return F.when(d > 0, F.shiftleft(F.lit(1), j)).otherwise(F.lit(0))
-
-    out = F.lit(0)
-    for j in range(n_bits):
-        out = out.bitwiseOR(bit(j))
-    return out
-
-
 def srp_signatures(
     embeddings: DataFrame,
     dim: int,
@@ -135,11 +105,11 @@ def srp_signatures(
     (np.random.default_rng(seed+t), the textbook SRP construction) and
     bits = sign(V @ H_tᵀ) packed into an int32 bucket id.
 
-    This replaces per-bit JVM expressions (hyperplane_signature): the
-    expression tree there is n_tables × n_bits × dim literal terms,
-    which costs ~20 s of Catalyst/codegen compile time per query —
-    more than the data itself at any tested scale. The numpy matmul is
-    a single BLAS call per batch and the plan stays tiny."""
+    This replaced per-bit JVM expressions: an expression tree of
+    n_tables × n_bits × dim literal terms cost ~20 s of Catalyst/codegen
+    compile time per query — more than the data itself at any tested
+    scale. The numpy matmul is a single BLAS call per batch and the
+    plan stays tiny."""
     import numpy as np
     import pyarrow as pa
 
@@ -364,7 +334,13 @@ def ivf_prune(
     readers resolving params always find their build. Deletes go
     through the Hadoop FileSystem of `path` — whatever FS Spark
     actually writes (HDFS/S3A/local), same discipline as the params
-    read. Returns the pruned tokens."""
+    read. Returns the pruned tokens.
+
+    Reader caveat: a DataFrame ivf_build returned stays bound to the
+    build it resolved, and prune cannot see live frames. Prune only
+    when no live frame resolves a superseded build older than `ttl_ns`,
+    or keep `keep_latest` ≥ the number of param sets in concurrent use;
+    otherwise a long-lived reader's next action finds its files gone."""
     import time as _time
 
     sc = spark.sparkContext
@@ -547,12 +523,14 @@ def near_dup_pairs(
     Degenerate buckets are CAPPED (VERDICT r3 wrong #1): dense embedding
     regions — boilerplate pages, zero/near-zero vectors — can put 10^6
     vectors in one SRP bucket, and an uncapped self-join there is
-    5·10^11 candidate pairs. Same policy as the MinHash/SimHash paths
-    (dedup._banded_pairs): buckets with ≤ max_bucket members get all
-    pairs; larger buckets get STAR pairs to the min-id representative —
-    O(n) pairs, and every member stays connected to the canonical
-    survivor (which is what dedup consumes the pair graph for). Bucket
-    stats come from a window (spill-safe), never a collect_list."""
+    5·10^11 candidate pairs. Pairing goes through the MinHash/SimHash
+    policy (dedup.bucket_pairs): buckets with ≤ max_bucket members get
+    all pairs; larger buckets get STAR pairs to the min-id
+    representative — O(n) pairs, and every member stays connected to
+    the canonical survivor (which is what dedup consumes the pair graph
+    for). Bucket stats come from a window (spill-safe), never a
+    collect_list."""
+    persisted = []
     if block_col is not None:
         e = embeddings.select(
             F.col(id_col).alias("id"),
@@ -561,10 +539,15 @@ def near_dup_pairs(
             F.col(block_col).alias("blk"),
         )
     else:
+        # the bucket frame feeds a self-join (2 sides) plus the star-pair
+        # branch: persist the signature frame so the SRP stage runs once
+        # per vector, not once per consumer (released by the caller via
+        # release_intermediates, ADVICE r3 pattern)
         sig = srp_signatures(
             embeddings, dim, n_bits, n_tables, seed=seed,
             id_col=id_col, vec_col=vec_col,
-        )
+        ).persist(StorageLevel.MEMORY_AND_DISK)
+        persisted.append(sig)
         e = sig.select(
             F.col(id_col).alias("id"),
             F.col(vec_col).alias("v"),
@@ -579,50 +562,22 @@ def near_dup_pairs(
     # the per-pair HOF work disappears (the pair count dwarfs the
     # member count in every blocked self-join).
     e = e.withColumn("_nv", norm(F.col("v")))
-    # star-pairing needs each member's vector alongside the
-    # representative's, so the rep is carried as a (id, v, _nv)
-    # struct — ordering compares id first and ids are unique, so
-    # min() picks the min-id member (the simhash_pairs pattern)
-    w = Window.partitionBy("tbl", "blk")
-    ann = (
-        e.withColumn("_n", F.count("*").over(w))
-        .withColumn("_rep", F.min(F.struct("id", "v", "_nv")).over(w))
-        .filter(F.col("_n") > 1)
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    # three consumers (both self-join sides + big_pairs) would re-run
-    # the SRP signature stage + window 3x without the persist; the
-    # frame is multi-member bucket rows only, spill-safe, and released
-    # by the caller via release_intermediates (ADVICE r3 pattern)
-    def _cos(av, an, bv, bn):
-        return F.round(cosine_with_norms(av, an, bv, bn), 6)
-
-    small = ann.filter(F.col("_n") <= max_bucket).select("tbl", "blk", "id", "v", "_nv")
-    a, b = small.alias("a"), small.alias("b")
-    small_pairs = (
-        a.join(b, ["tbl", "blk"])
-        .filter(F.col("a.id") < F.col("b.id"))
+    out = (
+        bucket_pairs(e, ["tbl", "blk"], max_bucket, id_col="id", carry=("v", "_nv"))
         .select(
             F.col("a.id").alias("id_a"),
             F.col("b.id").alias("id_b"),
-            _cos(F.col("a.v"), F.col("a._nv"), F.col("b.v"), F.col("b._nv")).alias("cos_sim"),
+            F.round(
+                cosine_with_norms(
+                    F.col("a.v"), F.col("a._nv"), F.col("b.v"), F.col("b._nv")
+                ),
+                6,
+            ).alias("cos_sim"),
         )
-    )
-    # rep has the bucket-min id, so id_a < id_b holds by construction
-    big_pairs = (
-        ann.filter((F.col("_n") > max_bucket) & (F.col("id") != F.col("_rep.id")))
-        .select(
-            F.col("_rep.id").alias("id_a"),
-            F.col("id").alias("id_b"),
-            _cos(F.col("_rep.v"), F.col("_rep._nv"), F.col("v"), F.col("_nv")).alias("cos_sim"),
-        )
-    )
-    out = (
-        small_pairs.unionByName(big_pairs)
         .filter(F.col("cos_sim") >= threshold)
         .distinct()
     )
-    out._ocr_persisted = [ann]  # noqa: SLF001 — release_intermediates
+    out._ocr_persisted = persisted  # noqa: SLF001 — release_intermediates
     return out
 
 

@@ -1160,10 +1160,10 @@ def _simhash_oracle_sql_for(sf_dir: str) -> str:
 
 
 def _simhash_oracle_sql() -> str:
-    """Generated VALUES oracle for K3: Charikar simhash (per-token
-    xxhash64 bit votes — the python XXH64 is verified against the JVM
-    in tests), 16-bit chunk bucketing, hamming verify — replayed by
-    tests/refspec_dataprep.py over _replay_sf_dir()."""
+    """Generated VALUES oracle for K3: Charikar simhash (bit votes
+    over the shared kernel's polynomial token hashes), 16-bit chunk
+    bucketing, hamming verify — replayed by tests/refspec_dataprep.py
+    over _replay_sf_dir()."""
     return _simhash_oracle_sql_for(_replay_sf_dir())
 
 
@@ -1716,9 +1716,10 @@ def q_decontam(spark, sf):
     vectorized 64-bit gram hashes (shared minhash kernel), eval hashes
     collected once (driver-budget-capped) and broadcast, one
     mapInArrow sort+searchsorted pass; zero corpus shuffle, zero
-    per-row Python. The pure-JVM broadcast-hash-join formulation
-    remains selectable as engine="sql". Oracle: the textbook
-    explode + join + group plan. Same answer, three different plans
+    per-row Python. That is the operator's one engine; the pure-JVM
+    broadcast-hash-join formulation is the differential reference in
+    tests/reference_engines.py. Oracle: the textbook explode + join +
+    group plan. Same answer, three different plans
     (dataprep/decontam.py)."""
     from ocr_tool_spark.dataprep.decontam import contamination
 

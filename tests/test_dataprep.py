@@ -73,7 +73,7 @@ def test_simhash_order_invariance(spark):
         [(1, "alpha bravo charlie delta"), (2, "delta charlie bravo alpha")],
         "doc_id long, text string",
     )
-    sigs = {r.doc_id: r.sig for r in dedup.with_simhash(d).collect()}
+    sigs = {r.doc_id: r.sig for r in dedup.simhash_signatures_arrow(d).collect()}
     assert sigs[1] == sigs[2]
 
 
@@ -336,13 +336,20 @@ def test_minhash_arrow_signatures_partitioning_invariant(spark):
 
 
 def test_minhash_expr_engine_matches_arrow_on_planted(spark):
-    """Both signature engines (vectorized Arrow, pure JVM expressions)
-    recover the identical planted dup/near-dup pair set."""
+    """Both signature engines (vectorized Arrow, the pure-JVM expression
+    reference) put the planted dup/near-dup pair set among their
+    bucket_pairs candidates."""
+    import reference_engines
+
     d = _mk_docs(spark)
-    arrow = {(r.id_a, r.id_b) for r in
-             dedup.minhash_lsh_pairs(d, threshold=0.5, engine="arrow").collect()}
-    expr = {(r.id_a, r.id_b) for r in
-            dedup.minhash_lsh_pairs(d, threshold=0.5, engine="expr").collect()}
+
+    def candidates(sigs):
+        banded = dedup.minhash_band_buckets(sigs)
+        return {(r.a.id, r.b.id) for r in
+                dedup.bucket_pairs(banded, ["band", "bucket"], 64).collect()}
+
+    arrow = candidates(dedup.minhash_signatures_arrow(d))
+    expr = candidates(reference_engines.minhash_signatures(d))
     planted_core = {(i, 1000 + i) for i in range(10)} | {(i, 2000 + i) for i in range(5)}
     assert planted_core <= arrow
     assert planted_core <= expr
@@ -622,22 +629,31 @@ def test_ivf_search_keeps_id_collisions_for_external_queries(spark, sf_dir_mid, 
     assert got[0].vec_id == 7 and got[0].cos_sim == 1.0
 
 
-def test_banded_pairs_invariants(spark):
-    """_banded_pairs structural invariants on a synthetic membership
-    frame mixing normal and oversized buckets: (1) id_a < id_b always;
+def test_bucket_pairs_invariants(spark):
+    """bucket_pairs structural invariants on a synthetic membership
+    frame mixing normal and oversized buckets: (1) a.id < b.id always;
     (2) a bucket at/below cap yields ALL its pairs; (3) an oversized
     bucket yields exactly star pairs to its min member — every member
-    connected, no quadratic blowup."""
+    connected, no quadratic blowup; (4) the carried payload travels
+    with its own member id, on both sides and on the star
+    representative."""
     rows = []
     # bucket A (band 0, bucket 100): 4 members -> all 6 pairs
     for d in [3, 1, 7, 5]:
-        rows.append((d, 0, 100))
+        rows.append((d, 0, 100, 100 - d))
     # bucket B (band 1, bucket 200): 10 members, cap 4 -> 9 star pairs
     for d in range(20, 30):
-        rows.append((d, 1, 200))
-    banded = spark.createDataFrame(rows, "doc_id long, band int, bucket long")
-    pairs = {(r.id_a, r.id_b) for r in
-             dedup._banded_pairs(banded, ["band", "bucket"], max_bucket=4).collect()}
+        rows.append((d, 1, 200, 100 - d))
+    banded = spark.createDataFrame(
+        rows, "doc_id long, band int, bucket long, sig long"
+    )
+    got = dedup.bucket_pairs(
+        banded, ["band", "bucket"], max_bucket=4, carry=("sig",)
+    ).collect()
+    for r in got:
+        assert r.a.sig == 100 - r.a.id and r.b.sig == 100 - r.b.id
+    pairs = {(r.a.id, r.b.id) for r in got}
+    assert len(pairs) == len(got)  # no pair shares two buckets here
     assert all(a < b for a, b in pairs)
     a_pairs = {p for p in pairs if p[0] < 20}
     assert a_pairs == {(1, 3), (1, 5), (1, 7), (3, 5), (3, 7), (5, 7)}

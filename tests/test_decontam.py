@@ -8,7 +8,8 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from ocr_tool_spark.dataprep.decontam import contamination, word_ngrams
+from ocr_tool_spark.dataprep.decontam import contamination
+from reference_engines import contamination_sql, word_ngrams
 
 EVAL_TEXT = "alpha bravo charlie delta echo foxtrot golf hotel india juliet"
 
@@ -56,8 +57,8 @@ def test_contamination_empty_eval_set(spark, corpus):
 
 
 def test_engines_agree_incl_fallback(spark):
-    """The arrow kernel engine and the SQL gram-string engine must
-    produce identical rows — including non-ASCII texts (the kernel's
+    """The arrow kernel engine and the SQL gram-string reference
+    (tests/reference_engines.py) must produce identical rows — including non-ASCII texts (the kernel's
     Python-string fallback), docs shorter than n, empty docs, and
     within-doc repeated grams (distinct-count semantics)."""
     base = "héllo wörld alpha bravo charlie delta echo foxtrot golf"
@@ -73,8 +74,8 @@ def test_engines_agree_incl_fallback(spark):
     key = lambda df: sorted(  # noqa: E731
         (r["doc_id"], r["n_shared_grams"], r["contaminated"]) for r in df.collect()
     )
-    a = key(contamination(corpus, ev, n=8, engine="arrow"))
-    s = key(contamination(corpus, ev, n=8, engine="sql"))
+    a = key(contamination(corpus, ev, n=8))
+    s = key(contamination_sql(corpus, ev, n=8))
     assert a == s
     assert a[0][1] > 0  # doc 1 overlaps the eval passage
 
