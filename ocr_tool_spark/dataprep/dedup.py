@@ -215,12 +215,12 @@ def bucket_pairs(
     members: DataFrame,
     key_cols: list[str],
     max_bucket: int,
-    id_col: str = "doc_id",
     carry: tuple[str, ...] = (),
 ) -> DataFrame:
-    """Candidate pairs from bucket membership rows, scale-safe — the one
-    bucket policy every LSH-style near-dup operator pairs through
-    (MinHash bands, SimHash chunks, SRP embedding buckets):
+    """Candidate pairs from (doc_id, *key_cols, *carry) bucket membership
+    rows, scale-safe — the one bucket policy every LSH-style near-dup
+    operator pairs through (MinHash bands, SimHash chunks, SRP embedding
+    buckets):
 
     - buckets with 2..max_bucket members → ALL pairs (self-join on the
       bucket key, i<j);
@@ -245,7 +245,7 @@ def bucket_pairs(
     w = Window.partitionBy(*key_cols)
     ann = (
         members.select(
-            *key_cols, F.struct(F.col(id_col).alias("id"), *carry).alias("m")
+            *key_cols, F.struct(F.col("doc_id").alias("id"), *carry).alias("m")
         )
         .withColumn("_n", F.count("*").over(w))
         .withColumn("_rep", F.min("m").over(w))

@@ -533,7 +533,7 @@ def near_dup_pairs(
     persisted = []
     if block_col is not None:
         e = embeddings.select(
-            F.col(id_col).alias("id"),
+            F.col(id_col).alias("doc_id"),
             F.col(vec_col).alias("v"),
             F.lit(0).alias("tbl"),
             F.col(block_col).alias("blk"),
@@ -549,7 +549,7 @@ def near_dup_pairs(
         ).persist(StorageLevel.MEMORY_AND_DISK)
         persisted.append(sig)
         e = sig.select(
-            F.col(id_col).alias("id"),
+            F.col(id_col).alias("doc_id"),
             F.col(vec_col).alias("v"),
             F.posexplode(
                 F.array(*[F.col(f"_b{t}") for t in range(n_tables)])
@@ -563,7 +563,7 @@ def near_dup_pairs(
     # member count in every blocked self-join).
     e = e.withColumn("_nv", norm(F.col("v")))
     out = (
-        bucket_pairs(e, ["tbl", "blk"], max_bucket, id_col="id", carry=("v", "_nv"))
+        bucket_pairs(e, ["tbl", "blk"], max_bucket, carry=("v", "_nv"))
         .select(
             F.col("a.id").alias("id_a"),
             F.col("b.id").alias("id_b"),
