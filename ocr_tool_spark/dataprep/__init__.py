@@ -1,5 +1,18 @@
 """Training-data pipeline operators (dedup, similarity, textstats,
-media). See SURVEY.md §2 K1-K16."""
+media, decontam, packing, curate). See SURVEY.md §2 K1-K21.
+
+Column contract: every operator reads its input columns by fixed name
+and takes no column-name arguments. Callers rename at the boundary.
+
+- text tables (dedup, textstats, decontam, packing, curate):
+  `documents(doc_id, text)`; `stratified_sample` also reads `lang`;
+- vector tables (similarity): `embeddings(vec_id, embedding, label)`;
+  `label` is read only by `topk_per_query` (and by `near_dup_pairs`
+  when it is passed as `block_col`);
+- media tables (media): `media_ref`, `bitmap` (the page raster, or the
+  RIFF/PCM payload for `audio_features`) plus `width`, `height`,
+  `n_pages`.
+"""
 
 from __future__ import annotations
 

@@ -56,12 +56,7 @@ def _batch_gram_hashes(col: pa.Array, n: int):
     return sh, doc_of, valid
 
 
-def _eval_gram_hashes(
-    eval_docs: DataFrame,
-    n: int,
-    text_col: str,
-    max_grams: int = 50_000_000,
-) -> np.ndarray:
+def _eval_gram_hashes(eval_docs: DataFrame, n: int, max_grams: int) -> np.ndarray:
     """Sorted distinct uint64 gram hashes of the eval set. The fetch is
     bounded by the operator's contract (benchmarks are small) AND by an
     explicit budget: the read is LIMIT(max_grams+1)-bounded — the
@@ -78,14 +73,14 @@ def _eval_gram_hashes(
                     [pa.array([], type=pa.int64())], names=["h"]
                 )
                 continue
-            sh, _, valid = _batch_gram_hashes(batch.column(text_col), n)
+            sh, _, valid = _batch_gram_hashes(batch.column("text"), n)
             hs = np.unique(sh[valid])
             yield pa.RecordBatch.from_arrays(
                 [pa.array(hs.view(np.int64), type=pa.int64())], names=["h"]
             )
 
     tbl = (
-        eval_docs.select(text_col)
+        eval_docs.select("text")
         .mapInArrow(fn, "h bigint")
         .distinct()
         .limit(max_grams + 1)
@@ -111,9 +106,6 @@ def contamination(
     docs: DataFrame,
     eval_docs: DataFrame,
     n: int = 8,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    eval_text_col: str | None = None,
     max_eval_grams: int = 50_000_000,
 ) -> DataFrame:
     """(doc_id, n_shared_grams, contaminated): per corpus doc, how many
@@ -121,18 +113,17 @@ def contamination(
     the ≥1-gram contamination flag. See the module docstring for the
     plan. `max_eval_grams` bounds the driver-side eval-hash fetch (see
     _eval_gram_hashes)."""
-    ev_col = eval_text_col or text_col
-    ev_sorted = _eval_gram_hashes(eval_docs, n, ev_col, max_eval_grams)
+    ev_sorted = _eval_gram_hashes(eval_docs, n, max_eval_grams)
     spark = docs.sparkSession
     bc = spark.sparkContext.broadcast(ev_sorted)
     id_type = dict(zip(docs.schema.names, docs.schema.fields))[
-        id_col
+        "doc_id"
     ].dataType.simpleString()
 
     def fn(batches):
         ev = bc.value
         for batch in batches:
-            ids = batch.column(id_col)
+            ids = batch.column("doc_id")
             ndocs = batch.num_rows
             if ndocs == 0:
                 yield pa.RecordBatch.from_arrays(
@@ -141,10 +132,10 @@ def contamination(
                         pa.array([], type=pa.int64()),
                         pa.array([], type=pa.int32()),
                     ],
-                    names=[id_col, "n_shared_grams", "contaminated"],
+                    names=["doc_id", "n_shared_grams", "contaminated"],
                 )
                 continue
-            sh, doc_of, valid = _batch_gram_hashes(batch.column(text_col), n)
+            sh, doc_of, valid = _batch_gram_hashes(batch.column("text"), n)
             counts = np.zeros(ndocs, dtype=np.int64)
             if ev.size and sh.size:
                 # distinct-within-doc + eval membership, no per-doc loop:
@@ -168,12 +159,12 @@ def contamination(
                     pa.array(counts, type=pa.int64()),
                     pa.array((counts > 0).astype(np.int32), type=pa.int32()),
                 ],
-                names=[id_col, "n_shared_grams", "contaminated"],
+                names=["doc_id", "n_shared_grams", "contaminated"],
             )
 
-    sel = docs.select(id_col, text_col)
+    sel = docs.select("doc_id", "text")
     par = spark.sparkContext.defaultParallelism
     sel = ensure_parallelism_floor(sel, par, min_bytes=32 << 20)
     return sel.mapInArrow(
-        fn, f"{id_col} {id_type}, n_shared_grams bigint, contaminated int"
+        fn, f"doc_id {id_type}, n_shared_grams bigint, contaminated int"
     )

@@ -103,8 +103,13 @@ def media_features(media_store: DataFrame) -> DataFrame:
     return media_store.mapInArrow(fn, MEDIA_FEATURES_SCHEMA)
 
 
-def thumbnails(media_store: DataFrame, size: int = 8) -> DataFrame:
-    """Block-mean downsample of page 0 to size×size uint8 (real resize)."""
+# thumbnail edge (pixels) and video-frame sampling stride (pages)
+THUMB_SIZE = 8
+FRAME_STRIDE = 2
+
+
+def thumbnails(media_store: DataFrame) -> DataFrame:
+    """Block-mean downsample of page 0 to THUMB_SIZE² uint8 (real resize)."""
 
     def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for batch in batches:
@@ -114,11 +119,11 @@ def thumbnails(media_store: DataFrame, size: int = 8) -> DataFrame:
                 d["media_ref"], d["width"], d["height"], d["n_pages"], d["bitmap"]
             ):
                 page = _decode(bm, w, h, p)[0].astype(np.float64)
-                ys = np.linspace(0, h, size + 1).astype(int)
-                xs = np.linspace(0, w, size + 1).astype(int)
-                t = np.empty((size, size), dtype=np.uint8)
-                for i in range(size):
-                    for j in range(size):
+                ys = np.linspace(0, h, THUMB_SIZE + 1).astype(int)
+                xs = np.linspace(0, w, THUMB_SIZE + 1).astype(int)
+                t = np.empty((THUMB_SIZE, THUMB_SIZE), dtype=np.uint8)
+                for i in range(THUMB_SIZE):
+                    for j in range(THUMB_SIZE):
                         cell = page[ys[i]:max(ys[i + 1], ys[i] + 1),
                                     xs[j]:max(xs[j + 1], xs[j] + 1)]
                         t[i, j] = int(round(cell.mean()))
@@ -127,8 +132,8 @@ def thumbnails(media_store: DataFrame, size: int = 8) -> DataFrame:
             yield pa.RecordBatch.from_pydict(
                 {
                     "media_ref": refs,
-                    "thumb_w": [size] * len(refs),
-                    "thumb_h": [size] * len(refs),
+                    "thumb_w": [THUMB_SIZE] * len(refs),
+                    "thumb_h": [THUMB_SIZE] * len(refs),
                     "thumbnail": thumbs,
                 },
                 schema=_THUMBNAIL_PA,
@@ -137,8 +142,8 @@ def thumbnails(media_store: DataFrame, size: int = 8) -> DataFrame:
     return media_store.mapInArrow(fn, THUMBNAIL_SCHEMA)
 
 
-def frame_sample(media_store: DataFrame, stride: int = 2) -> DataFrame:
-    """Sample every `stride`-th page (video-frame-sampling shape, real
+def frame_sample(media_store: DataFrame) -> DataFrame:
+    """Sample every FRAME_STRIDE-th page (video-frame-sampling shape, real
     for our multi-page rasters): 1→N rows with the frame bytes."""
 
     def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
@@ -149,7 +154,7 @@ def frame_sample(media_store: DataFrame, stride: int = 2) -> DataFrame:
                 d["media_ref"], d["width"], d["height"], d["n_pages"], d["bitmap"]
             ):
                 pages = _decode(bm, w, h, p)
-                for idx in range(0, p, stride):
+                for idx in range(0, p, FRAME_STRIDE):
                     out["media_ref"].append(ref)
                     out["page_idx"].append(idx)
                     out["width"].append(w)
@@ -231,7 +236,7 @@ def decode_audio(payload: bytes) -> tuple[np.ndarray, int]:
     return np.frombuffer(data, dtype=dtype), sample_rate
 
 
-def audio_features(media_store: DataFrame, payload_col: str = "bitmap") -> DataFrame:
+def audio_features(media_store: DataFrame) -> DataFrame:
     """Audio feature extraction (K16): real RIFF/PCM decode + RMS over
     one Arrow stage, same batching/partition behavior as the image
     stages."""
@@ -240,7 +245,7 @@ def audio_features(media_store: DataFrame, payload_col: str = "bitmap") -> DataF
         for batch in batches:
             d = batch.to_pydict()
             out = {k: [] for k in ("media_ref", "sample_rate", "n_samples", "rms")}
-            for ref, payload in zip(d["media_ref"], d[payload_col]):
+            for ref, payload in zip(d["media_ref"], d["bitmap"]):
                 samples, rate = decode_audio(payload)
                 out["media_ref"].append(ref)
                 out["sample_rate"].append(rate)

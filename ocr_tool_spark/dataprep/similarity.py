@@ -63,30 +63,28 @@ def brute_topk(
     embeddings: DataFrame,
     query_vec_id: int,
     k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Exact top-k cosine neighbors of one stored vector. The 1-row
     query side is broadcast; the scan side streams — the plan a
     1000-executor cluster wants for single-probe lookups."""
     q = F.broadcast(
-        embeddings.filter(F.col(id_col) == query_vec_id).select(
-            F.col(vec_col).alias("_qv"), norm(F.col(vec_col)).alias("_qn")
+        embeddings.filter(F.col("vec_id") == query_vec_id).select(
+            F.col("embedding").alias("_qv"), norm(F.col("embedding")).alias("_qn")
         )
     )
     return (
-        embeddings.filter(F.col(id_col) != query_vec_id)
+        embeddings.filter(F.col("vec_id") != query_vec_id)
         .crossJoin(q)
         .select(
-            id_col,
+            "vec_id",
             F.round(
                 cosine_with_norms(
-                    F.col(vec_col), norm(F.col(vec_col)), F.col("_qv"), F.col("_qn")
+                    F.col("embedding"), norm(F.col("embedding")), F.col("_qv"), F.col("_qn")
                 ),
                 6,
             ).alias("cos_sim"),
         )
-        .orderBy(F.desc("cos_sim"), id_col)
+        .orderBy(F.desc("cos_sim"), "vec_id")
         .limit(k)
     )
 
@@ -97,10 +95,8 @@ def srp_signatures(
     n_bits: int = 8,
     n_tables: int = 4,
     seed: int = 100,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
-    """(id, vec, _b0.._b{n_tables-1}) — one vectorized Arrow stage:
+    """(vec_id, embedding, _b0.._b{n_tables-1}) — one vectorized Arrow stage:
     per table t, a deterministic Gaussian hyperplane matrix H_t
     (np.random.default_rng(seed+t), the textbook SRP construction) and
     bits = sign(V @ H_tᵀ) packed into an int32 bucket id.
@@ -113,15 +109,15 @@ def srp_signatures(
     import numpy as np
     import pyarrow as pa
 
-    id_type = embeddings.schema[id_col].dataType.simpleString()
+    id_type = embeddings.schema["vec_id"].dataType.simpleString()
     # preserve the input element type (float vs double): hard-casting
     # doubles to float32 degraded downstream cosine scoring at
     # round(,6)/threshold boundaries (ADVICE r2)
-    elem_type = embeddings.schema[vec_col].dataType.elementType.simpleString()
+    elem_type = embeddings.schema["embedding"].dataType.elementType.simpleString()
     pa_elem = {"float": pa.float32(), "double": pa.float64()}.get(elem_type)
     if pa_elem is None:  # int/decimal embeddings: promote to double
         elem_type, pa_elem = "double", pa.float64()
-    out_schema = f"{id_col} {id_type}, {vec_col} array<{elem_type}>" + "".join(
+    out_schema = f"vec_id {id_type}, embedding array<{elem_type}>" + "".join(
         f", _b{t} int" for t in range(n_tables)
     )
     planes = [
@@ -132,7 +128,7 @@ def srp_signatures(
 
     def fn(batches):
         for batch in batches:
-            vecs = batch.column(vec_col)
+            vecs = batch.column("embedding")
             n = batch.num_rows
             # zero-copy ingest (VERDICT r4 wrong #3): the ListArray's
             # values buffer is already contiguous float32/64 —
@@ -148,15 +144,15 @@ def srp_signatures(
                 or (np.diff(vecs.offsets.to_numpy()) != dim).any()
             ):
                 raise ValueError(
-                    f"{vec_col} must be non-null fixed-dim({dim}) vectors"
+                    f"embedding must be non-null fixed-dim({dim}) vectors"
                 )
             V = (
                 flat.to_numpy(zero_copy_only=False)
                 .astype(np.float64, copy=False)
                 .reshape(n, dim)
             )
-            cols = [batch.column(id_col), vecs.cast(pa.list_(pa_elem))]
-            names = [id_col, vec_col]
+            cols = [batch.column("vec_id"), vecs.cast(pa.list_(pa_elem))]
+            names = ["vec_id", "embedding"]
             for t in range(n_tables):
                 if V.size:
                     bits = (V @ planes[t].T) > 0
@@ -167,7 +163,7 @@ def srp_signatures(
                 names.append(f"_b{t}")
             yield pa.RecordBatch.from_arrays(cols, names=names)
 
-    return embeddings.select(id_col, vec_col).mapInArrow(fn, out_schema)
+    return embeddings.select("vec_id", "embedding").mapInArrow(fn, out_schema)
 
 
 def lsh_topk(
@@ -177,8 +173,6 @@ def lsh_topk(
     dim: int = 64,
     n_bits: int = 8,
     n_tables: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Approximate top-k: only vectors sharing an SRP bucket with the
     query in ≥1 of n_tables are scored. Trades recall for scanning
@@ -186,14 +180,12 @@ def lsh_topk(
     # no persist: the signature stage is one cheap Arrow matmul, and the
     # two consumers (query-row lookup, corpus scan) re-run it for less
     # than a cache write costs at every tested scale
-    sig = srp_signatures(
-        embeddings, dim, n_bits, n_tables, seed=100, id_col=id_col, vec_col=vec_col
-    )
-    qrow = sig.filter(F.col(id_col) == query_vec_id)
+    sig = srp_signatures(embeddings, dim, n_bits, n_tables, seed=100)
+    qrow = sig.filter(F.col("vec_id") == query_vec_id)
     q = F.broadcast(
         qrow.select(
-            F.col(vec_col).alias("_qv"),
-            norm(F.col(vec_col)).alias("_qn"),
+            F.col("embedding").alias("_qv"),
+            norm(F.col("embedding")).alias("_qn"),
             *[F.col(f"_b{t}").alias(f"_qb{t}") for t in range(n_tables)],
         )
     )
@@ -202,30 +194,51 @@ def lsh_topk(
         m = F.col(f"_b{t}") == F.col(f"_qb{t}")
         match_any = m if match_any is None else (match_any | m)
     return (
-        sig.filter(F.col(id_col) != query_vec_id)
+        sig.filter(F.col("vec_id") != query_vec_id)
         .crossJoin(q)
         .filter(match_any)
         .select(
-            id_col,
+            "vec_id",
             F.round(
                 cosine_with_norms(
-                    F.col(vec_col), norm(F.col(vec_col)), F.col("_qv"), F.col("_qn")
+                    F.col("embedding"), norm(F.col("embedding")), F.col("_qv"), F.col("_qn")
                 ),
                 6,
             ).alias("cos_sim"),
         )
-        .orderBy(F.desc("cos_sim"), id_col)
+        .orderBy(F.desc("cos_sim"), "vec_id")
         .limit(k)
     )
 
 
+# KMeans seed of every IVF build; recorded in each params row
+IVF_SEED = 42
+
+
+def _published_builds(spark, path: str) -> list[dict]:
+    """The complete published IVF build rows at `path`, newest
+    (max build_ts) first: one recursive read of every `params/<token>/`
+    row. Empty when nothing is published — the path is absent on the
+    warehouse FS, or holds only a pre-r4 legacy marker."""
+    try:
+        rows = [
+            r.asDict()
+            for r in spark.read.option("recursiveFileLookup", "true")
+            .option("mergeSchema", "true")
+            .parquet(f"{path}/params")
+            .collect()
+        ]
+    except Exception:  # path absent on the warehouse FS: not built
+        return []
+    return sorted(
+        (r for r in rows if r.get("build") and r.get("build_ts") is not None),
+        key=lambda r: r["build_ts"],
+        reverse=True,
+    )
+
+
 def ivf_build(
-    embeddings: DataFrame,
-    path: str,
-    n_centroids: int = 16,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    seed: int = 42,
+    embeddings: DataFrame, path: str, n_centroids: int = 16
 ) -> tuple[DataFrame, DataFrame]:
     """Build the IVF index ONCE and persist it: KMeans coarse quantizer
     → (assigned, centroids) parquet at `path`. assigned = the corpus
@@ -254,37 +267,20 @@ def ivf_build(
     import time as _time
 
     spark = embeddings.sparkSession
-
-    def _published():
-        """Newest complete published build row, or None."""
-        try:
-            rows = [
-                r.asDict()
-                for r in spark.read.option("recursiveFileLookup", "true")
-                .option("mergeSchema", "true")
-                .parquet(f"{path}/params")
-                .collect()
-            ]
-        except Exception:  # path absent on the warehouse FS: not built
-            return None
-        rows = [r for r in rows if r.get("build") and r.get("build_ts") is not None]
-        if not rows:  # empty or pre-r4 legacy marker: rebuild
-            return None
-        return max(rows, key=lambda r: r["build_ts"])
-
-    cur = _published()
-    if cur is None or (cur["n_centroids"], cur["seed"]) != (n_centroids, seed):
+    published = _published_builds(spark, path)
+    cur = published[0] if published else None
+    if cur is None or (cur["n_centroids"], cur["seed"]) != (n_centroids, IVF_SEED):
         from pyspark.ml.clustering import KMeans
         from pyspark.ml.functions import array_to_vector
 
         token = _os.urandom(8).hex()
         base = f"{path}/builds/{token}"
-        assembled = embeddings.withColumn("_v", array_to_vector(F.col(vec_col)))
-        model = KMeans(k=n_centroids, seed=seed, featuresCol="_v").fit(assembled)
+        assembled = embeddings.withColumn("_v", array_to_vector(F.col("embedding")))
+        model = KMeans(k=n_centroids, seed=IVF_SEED, featuresCol="_v").fit(assembled)
         assigned = (
             model.transform(assembled)
             .withColumnRenamed("prediction", "_cell")
-            .select(id_col, vec_col, "_cell")
+            .select("vec_id", "embedding", "_cell")
         )
         assigned.repartition("_cell").write.mode("overwrite").partitionBy(
             "_cell"
@@ -296,12 +292,12 @@ def ivf_build(
             cent_rows, "cell int, centroid array<double>"
         ).coalesce(1).write.mode("overwrite").parquet(f"{base}/centroids")
         spark.createDataFrame(
-            [(int(n_centroids), int(seed), token, _time.time_ns())],
+            [(int(n_centroids), IVF_SEED, token, _time.time_ns())],
             "n_centroids int, seed int, build string, build_ts long",
         ).coalesce(1).write.mode("overwrite").parquet(f"{path}/params/{token}")
-        cur = _published()
-        if cur is None:  # a racing overwrite clobbered mid-read: ours is complete
-            cur = {"build": token}
+        published = _published_builds(spark, path)
+        # a racing overwrite clobbered mid-read: ours is complete
+        cur = published[0] if published else {"build": token}
     base = f"{path}/builds/{cur['build']}"
     return (
         spark.read.parquet(f"{base}/assigned"),
@@ -349,21 +345,7 @@ def ivf_prune(
     fs = hpath(path).getFileSystem(sc._jsc.hadoopConfiguration())
     now = _time.time_ns()
 
-    try:
-        rows = [
-            r.asDict()
-            for r in spark.read.option("recursiveFileLookup", "true")
-            .option("mergeSchema", "true")
-            .parquet(f"{path}/params")
-            .collect()
-        ]
-    except Exception:  # no params published: nothing is referenced
-        rows = []
-    published = sorted(
-        (r for r in rows if r.get("build") and r.get("build_ts") is not None),
-        key=lambda r: r["build_ts"],
-        reverse=True,
-    )
+    published = _published_builds(spark, path)
     keep = {r["build"] for r in published[: max(keep_latest, 1)]}
     pruned: list[str] = []
     for r in published[max(keep_latest, 1) :]:
@@ -391,8 +373,6 @@ def ivf_search(
     queries: DataFrame,
     k: int = 10,
     nprobe: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     exclude_self: bool = True,
 ) -> DataFrame:
     """Probe the IVF index for each query row — fully declarative, no
@@ -406,9 +386,9 @@ def ivf_search(
     table whose id space is unrelated to corpus ids (an id collision
     would otherwise silently drop a legitimate neighbor)."""
     q = queries.select(
-        F.col(id_col).alias("qid"),
-        F.col(vec_col).alias("_qv"),
-        norm(F.col(vec_col)).alias("_qn"),
+        F.col("vec_id").alias("qid"),
+        F.col("embedding").alias("_qv"),
+        norm(F.col("embedding")).alias("_qn"),
     )
     wc = Window.partitionBy("qid").orderBy("l2", "cell")
     cells = (
@@ -428,18 +408,18 @@ def ivf_search(
         .filter(F.col("_rn") <= nprobe)
         .select("qid", "_qv", "_qn", F.col("cell").alias("_cell"))
     )
-    w = Window.partitionBy("qid").orderBy(F.desc("cos_sim"), id_col)
+    w = Window.partitionBy("qid").orderBy(F.desc("cos_sim"), "vec_id")
     cand = assigned.join(F.broadcast(cells), "_cell")
     if exclude_self:
-        cand = cand.filter(F.col(id_col) != F.col("qid"))
+        cand = cand.filter(F.col("vec_id") != F.col("qid"))
     return (
         cand
         .select(
             "qid",
-            id_col,
+            "vec_id",
             F.round(
                 cosine_with_norms(
-                    F.col(vec_col), norm(F.col(vec_col)), F.col("_qv"), F.col("_qn")
+                    F.col("embedding"), norm(F.col("embedding")), F.col("_qv"), F.col("_qn")
                 ),
                 6,
             ).alias("cos_sim"),
@@ -455,44 +435,39 @@ def ivf_topk(
     k: int = 10,
     n_centroids: int = 16,
     nprobe: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    seed: int = 42,
-    index_path: str | None = None,
 ) -> DataFrame:
-    """Single-probe face of the IVF index (back-compat signature).
-    The index is built at most once per (input identity, n_centroids,
-    seed): the default path hashes the source schema + file list +
-    file sizes/mtimes, so regenerating the data in place gets a fresh
-    index, and ivf_build's marker makes every later call a pure read —
-    no KMeans fit in the probe path, no session-bound caching (the
-    returned frames always belong to the CURRENT session)."""
+    """Single-probe face of the IVF index: build (or reuse) the index
+    for this input, then probe it with one stored vector. The index is
+    built at most once per (input identity, n_centroids): its path
+    hashes the source schema + file list + file sizes/mtimes, so
+    regenerating the data in place gets a fresh index, and ivf_build's
+    marker makes every later call a pure read — no KMeans fit in the
+    probe path, no session-bound caching (the returned frames always
+    belong to the CURRENT session)."""
     import hashlib
     import os
 
-    if index_path is None:
-        basis = [vec_col, str(n_centroids), str(seed), embeddings.schema.simpleString()]
-        files = sorted(embeddings.inputFiles())
-        for f in files:
-            basis.append(f)
-            local = f.removeprefix("file:")
-            if os.path.exists(local):
-                st = os.stat(local)
-                basis.append(f"{st.st_size}:{st.st_mtime_ns}")
-        if not files:
-            # in-memory input (tests): no file identity — use a bounded
-            # content sample, same discipline as runner.input_fingerprint
-            basis.append(repr(embeddings.limit(64).collect()))
-        key = hashlib.sha256("|".join(basis).encode()).hexdigest()[:16]
-        index_path = f"/tmp/ocr_ivf_index/{key}"
-    assigned, centroids = ivf_build(
-        embeddings, index_path, n_centroids, id_col, vec_col, seed
-    )
-    queries = embeddings.filter(F.col(id_col) == query_vec_id)
+    # the column name and seed stay in the basis so existing index
+    # paths keep their keys
+    basis = ["embedding", str(n_centroids), str(IVF_SEED), embeddings.schema.simpleString()]
+    files = sorted(embeddings.inputFiles())
+    for f in files:
+        basis.append(f)
+        local = f.removeprefix("file:")
+        if os.path.exists(local):
+            st = os.stat(local)
+            basis.append(f"{st.st_size}:{st.st_mtime_ns}")
+    if not files:
+        # in-memory input (tests): no file identity — use a bounded
+        # content sample, same discipline as runner.input_fingerprint
+        basis.append(repr(embeddings.limit(64).collect()))
+    key = hashlib.sha256("|".join(basis).encode()).hexdigest()[:16]
+    assigned, centroids = ivf_build(embeddings, f"/tmp/ocr_ivf_index/{key}", n_centroids)
+    queries = embeddings.filter(F.col("vec_id") == query_vec_id)
     return (
-        ivf_search(assigned, centroids, queries, k, nprobe, id_col, vec_col)
-        .select(id_col, "cos_sim")
-        .orderBy(F.desc("cos_sim"), id_col)
+        ivf_search(assigned, centroids, queries, k, nprobe)
+        .select("vec_id", "cos_sim")
+        .orderBy(F.desc("cos_sim"), "vec_id")
         .limit(k)
     )
 
@@ -500,13 +475,10 @@ def ivf_topk(
 def near_dup_pairs(
     embeddings: DataFrame,
     threshold: float = 0.9,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     block_col: str | None = None,
     dim: int = 64,
     n_bits: int = 8,
     n_tables: int = 4,
-    seed: int = 500,
     max_bucket: int = 64,
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs (id_a < id_b, cos ≥
@@ -533,8 +505,8 @@ def near_dup_pairs(
     persisted = []
     if block_col is not None:
         e = embeddings.select(
-            F.col(id_col).alias("doc_id"),
-            F.col(vec_col).alias("v"),
+            F.col("vec_id").alias("doc_id"),
+            F.col("embedding").alias("v"),
             F.lit(0).alias("tbl"),
             F.col(block_col).alias("blk"),
         )
@@ -543,14 +515,13 @@ def near_dup_pairs(
         # branch: persist the signature frame so the SRP stage runs once
         # per vector, not once per consumer (released by the caller via
         # release_intermediates, ADVICE r3 pattern)
-        sig = srp_signatures(
-            embeddings, dim, n_bits, n_tables, seed=seed,
-            id_col=id_col, vec_col=vec_col,
-        ).persist(StorageLevel.MEMORY_AND_DISK)
+        sig = srp_signatures(embeddings, dim, n_bits, n_tables, seed=500).persist(
+            StorageLevel.MEMORY_AND_DISK
+        )
         persisted.append(sig)
         e = sig.select(
-            F.col(id_col).alias("doc_id"),
-            F.col(vec_col).alias("v"),
+            F.col("vec_id").alias("doc_id"),
+            F.col("embedding").alias("v"),
             F.posexplode(
                 F.array(*[F.col(f"_b{t}") for t in range(n_tables)])
             ).alias("tbl", "blk"),
@@ -581,27 +552,21 @@ def near_dup_pairs(
     return out
 
 
-def topk_per_query(
-    queries: DataFrame,
-    corpus: DataFrame,
-    k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    block_col: str = "label",
-) -> DataFrame:
-    """Batch k-NN: top-k corpus neighbors for every query row, blocked —
-    join + window top-k, the shuffle-bounded shape for query *tables*."""
+def topk_per_query(queries: DataFrame, corpus: DataFrame) -> DataFrame:
+    """Batch k-NN: the top-5 corpus neighbors for every query row,
+    blocked on `label` — join + window top-k, the shuffle-bounded shape
+    for query *tables*."""
     qd = queries.select(
-        F.col(id_col).alias("qid"),
-        F.col(vec_col).alias("qv"),
-        norm(F.col(vec_col)).alias("qn"),
-        F.col(block_col).alias("blk"),
+        F.col("vec_id").alias("qid"),
+        F.col("embedding").alias("qv"),
+        norm(F.col("embedding")).alias("qn"),
+        F.col("label").alias("blk"),
     )
     cd = corpus.select(
-        F.col(id_col).alias("cid"),
-        F.col(vec_col).alias("cv"),
-        norm(F.col(vec_col)).alias("cn"),
-        F.col(block_col).alias("blk"),
+        F.col("vec_id").alias("cid"),
+        F.col("embedding").alias("cv"),
+        norm(F.col("embedding")).alias("cn"),
+        F.col("label").alias("blk"),
     )
     scored = (
         qd.join(cd, "blk")
@@ -616,5 +581,5 @@ def topk_per_query(
     )
     w = Window.partitionBy("qid").orderBy(F.desc("cos_sim"), "cid")
     return scored.withColumn("rn", F.row_number().over(w)).filter(
-        F.col("rn") <= k
+        F.col("rn") <= 5
     ).select("qid", "cid", "cos_sim", F.col("rn").cast("long").alias("rn"))

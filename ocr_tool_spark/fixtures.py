@@ -194,7 +194,6 @@ def gen_corpus(
     n_docs: int,
     n_media: int | None = None,
     seed: int = 42,
-    skew: bool = True,
     heavy: bool = False,
 ) -> tuple[list[dict], list[dict]]:
     """Returns (documents_interleaved, media_store) as plain dicts.
@@ -203,7 +202,7 @@ def gen_corpus(
         n_media = max(16, n_docs // 8)
     media = gen_media_store(n_media, seed=seed, heavy=heavy)
     refs = [m["media_ref"] for m in media]
-    n_skew = max(1, n_docs // 100) if skew else 0
+    n_skew = max(1, n_docs // 100)
     docs = []
     for i in range(n_docs):
         rng = random.Random((seed << 20) ^ (0xD0C + i * 7919))

@@ -28,14 +28,11 @@ def salted_join(
     build: DataFrame,
     on: str,
     salt: int = 8,
-    salt_source: str | None = None,
     how: str = "inner",
 ) -> DataFrame:
-    """Equi-join robust to hot keys on the probe side.
-
-    ``salt_source``: a probe column whose per-row variety spreads the
-    hot key (defaults to the whole-row via monotonically varying
-    xxhash64 of all probe columns).
+    """Equi-join robust to hot keys on the probe side. The probe salt
+    is the xxhash64 of the whole probe row, so rows sharing a hot key
+    still spread over `salt` partitions.
 
     Only probe-preserving join types are allowed: the build side is
     replicated `salt` times, so for right/full joins every unmatched
@@ -54,10 +51,7 @@ def salted_join(
             f"alias spelling), not {how!r}: build-side replication would "
             "duplicate unmatched build rows"
         )
-    if salt_source is None:
-        salt_col = F.pmod(F.xxhash64(*[F.col(c) for c in probe.columns]), F.lit(salt))
-    else:
-        salt_col = F.pmod(F.xxhash64(salt_source), F.lit(salt))
+    salt_col = F.pmod(F.xxhash64(*[F.col(c) for c in probe.columns]), F.lit(salt))
     p = probe.withColumn("_salt", salt_col.cast("int"))
     b = build.withColumn(
         "_salt", F.explode(F.sequence(F.lit(0), F.lit(salt - 1)))

@@ -604,12 +604,9 @@ def q_math(spark, sf):
     "count(*) AS n FROM events GROUP BY 1, 2",
 )
 def q_tumbling(spark, sf):
-    e = load_table(spark, sf, "events")
-    return (
-        e.groupBy(F.window("ts", "10 minutes").alias("w"), "event_type")
-        .agg(F.count("*").alias("n"))
-        .select(F.col("w")["start"].alias("win_start"), "event_type", "n")
-    )
+    from ocr_tool_spark.streaming.incremental import tumbling_counts
+
+    return tumbling_counts(load_table(spark, sf, "events"))
 
 
 @q(
@@ -624,12 +621,9 @@ def q_sliding(spark, sf):
     sliding by 5 assigns each event to exactly the two epoch-aligned
     5-minute starts covering it — replayed in SQL via unnest over both
     candidate starts."""
-    e = load_table(spark, sf, "events")
-    return (
-        e.groupBy(F.window("ts", "10 minutes", "5 minutes").alias("w"), "event_type")
-        .agg(F.count("*").alias("n"))
-        .select(F.col("w")["start"].alias("win_start"), "event_type", "n")
-    )
+    from ocr_tool_spark.streaming.incremental import sliding_counts
+
+    return sliding_counts(load_table(spark, sf, "events"))
 
 
 @q(
@@ -649,17 +643,9 @@ def q_session_window(spark, sf):
     flag → running-sum session id → group. A session splits when the
     inter-event gap reaches 5 minutes and ends at last_ts + gap —
     exactly Spark's session_window semantics."""
-    e = load_table(spark, sf, "events")
-    return (
-        e.groupBy(F.session_window("ts", "5 minutes").alias("w"), "user_id")
-        .agg(F.count("*").alias("n"))
-        .select(
-            F.col("w")["start"].alias("sess_start"),
-            F.col("w")["end"].alias("sess_end"),
-            "user_id",
-            "n",
-        )
-    )
+    from ocr_tool_spark.streaming.incremental import session_counts
+
+    return session_counts(load_table(spark, sf, "events"))
 
 
 # ------------------------------------------------ I. extraction (flagship)
@@ -1324,7 +1310,7 @@ def q_knn_batch(spark, sf):
     from ocr_tool_spark.dataprep.similarity import topk_per_query
 
     e = load_table(spark, sf, "embeddings")
-    return topk_per_query(e.filter(F.col("vec_id") < 20), e, k=5)
+    return topk_per_query(e.filter(F.col("vec_id") < 20), e)
 
 
 @q(
@@ -1521,7 +1507,7 @@ def q_thumbnails(spark, sf):  # window; locally oracle-gated
     from ocr_tool_spark.sources.tables import media_df
 
     _, media = _fixture_corpus_80()
-    return thumbnails(media_df(spark, media), size=8).select(
+    return thumbnails(media_df(spark, media)).select(
         "media_ref",
         F.col("thumb_w").cast("long").alias("thumb_w"),
         F.col("thumb_h").cast("long").alias("thumb_h"),
@@ -1564,7 +1550,7 @@ def q_frame_sample(spark, sf):  # 50-key window; locally oracle-gated
     from ocr_tool_spark.sources.tables import media_df
 
     _, media = _fixture_corpus_80()
-    return frame_sample(media_df(spark, media), stride=2).select(
+    return frame_sample(media_df(spark, media)).select(
         "media_ref",
         F.col("page_idx").cast("long").alias("page_idx"),
         F.col("width").cast("long").alias("width"),
@@ -1687,7 +1673,6 @@ def q_stratified_sample(spark, sf):
     return stratified_sample(
         load_table(spark, sf, "documents"),
         rates={"en": 0.5, "zh": 0.25, "de": 1.0},
-        stratum_col="lang",
         default_rate=1.0 / 16,
     )
 
@@ -1795,5 +1780,5 @@ def q_curate(spark, sf):  # window; locally oracle-gated
     docs = load_table(spark, sf, "documents").select("doc_id", "text")
     ev = docs.filter(F.col("doc_id") % 97 == 0)
     return curate_corpus(
-        _planted_docs(spark, sf), ev, threshold=0.6, n=8, budget=2048
+        _planted_docs(spark, sf), ev, threshold=0.6, budget=2048
     )

@@ -122,11 +122,7 @@ def ocr_referenced_media(media_spans: DataFrame, media_store: DataFrame) -> Data
     )
 
 
-def extract_spans(
-    docs: DataFrame,
-    media_store: DataFrame | None = None,
-    broadcast_media: bool = True,
-) -> DataFrame:
+def extract_spans(docs: DataFrame, media_store: DataFrame | None = None) -> DataFrame:
     """Span-level extraction: one row per span with extracted text.
     Columns: doc_id, kind, text, media_ref, offset, ocr_ms (null on the
     text branch)."""
@@ -151,11 +147,9 @@ def extract_spans(
         )
     else:
         ocr_res = ocr_referenced_media(media_spans, media_store)
-        if broadcast_media:
-            ocr_res = F.broadcast(ocr_res)
         media_out = (
             media_spans.select("doc_id", "media_ref", "offset")
-            .join(ocr_res, "media_ref", "left")
+            .join(F.broadcast(ocr_res), "media_ref", "left")
             .select(
                 "doc_id",
                 F.lit(KIND_MEDIA).alias("kind"),
@@ -172,9 +166,8 @@ def extract_documents(
     docs: DataFrame,
     media_store: DataFrame | None = None,
     salt: int | None = None,
-    broadcast_media: bool = True,
 ) -> DataFrame:
     """Full pipeline: interleaved doc table in, extracted doc table out
     (same (doc_id, spans) shape, spans ordered by offset)."""
-    spans = extract_spans(docs, media_store, broadcast_media=broadcast_media)
+    spans = extract_spans(docs, media_store)
     return reassemble(spans.drop("ocr_ms"), salt=salt)

@@ -33,54 +33,46 @@ EVENTS_SCHEMA = (
 )
 
 
-def read_events_stream(
-    spark: SparkSession, path: str, max_files_per_trigger: int | None = None
-) -> DataFrame:
+def read_events_stream(spark: SparkSession, path: str) -> DataFrame:
     """L1: incremental parquet source with explicit schema."""
-    r = spark.readStream.schema(EVENTS_SCHEMA)
-    if max_files_per_trigger is not None:
-        r = r.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    return r.parquet(path)
+    return spark.readStream.schema(EVENTS_SCHEMA).parquet(path)
 
 
 def read_docs_stream(spark: SparkSession, path: str) -> DataFrame:
     return spark.readStream.schema(DOC).parquet(path)
 
 
-def tumbling_counts(
-    events: DataFrame, width: str = "10 minutes", watermark: str = "10 minutes"
-) -> DataFrame:
-    """L2+L3: watermarked tumbling-window counts per event_type."""
+# event-time watermark of every windowed/deduplicating stream below; a
+# batch plan drops it (EliminateEventTimeWatermark), so the same
+# functions serve the batch driver queries
+WATERMARK = "10 minutes"
+
+
+def tumbling_counts(events: DataFrame) -> DataFrame:
+    """L2+L3: watermarked 10-minute tumbling-window counts per event_type."""
     return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", width).alias("w"), "event_type")
+        events.withWatermark("ts", WATERMARK)
+        .groupBy(F.window("ts", "10 minutes").alias("w"), "event_type")
         .agg(F.count("*").alias("n"))
         .select(F.col("w")["start"].alias("win_start"), "event_type", "n")
     )
 
 
-def sliding_counts(
-    events: DataFrame,
-    width: str = "10 minutes",
-    slide: str = "5 minutes",
-    watermark: str = "10 minutes",
-) -> DataFrame:
-    """L4: overlapping windows."""
+def sliding_counts(events: DataFrame) -> DataFrame:
+    """L4: overlapping windows — 10 minutes wide, sliding by 5."""
     return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", width, slide).alias("w"), "event_type")
+        events.withWatermark("ts", WATERMARK)
+        .groupBy(F.window("ts", "10 minutes", "5 minutes").alias("w"), "event_type")
         .agg(F.count("*").alias("n"))
         .select(F.col("w")["start"].alias("win_start"), "event_type", "n")
     )
 
 
-def session_counts(
-    events: DataFrame, gap: str = "5 minutes", watermark: str = "10 minutes"
-) -> DataFrame:
-    """L5: session windows per user (gap-based)."""
+def session_counts(events: DataFrame) -> DataFrame:
+    """L5: session windows per user, closed by a 5-minute gap."""
     return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.session_window("ts", gap).alias("w"), "user_id")
+        events.withWatermark("ts", WATERMARK)
+        .groupBy(F.session_window("ts", "5 minutes").alias("w"), "user_id")
         .agg(F.count("*").alias("n"))
         .select(
             F.col("w")["start"].alias("sess_start"),
@@ -91,9 +83,9 @@ def session_counts(
     )
 
 
-def dedupe_events(events: DataFrame, watermark: str = "10 minutes") -> DataFrame:
+def dedupe_events(events: DataFrame) -> DataFrame:
     """L6: drop duplicate event_ids within the watermark horizon."""
-    return events.withWatermark("ts", watermark).dropDuplicatesWithinWatermark(
+    return events.withWatermark("ts", WATERMARK).dropDuplicatesWithinWatermark(
         ["event_id"]
     )
 
@@ -113,16 +105,12 @@ def run_to_memory_sink(stream_df: DataFrame, name: str, mode: str = "complete") 
     return stream_df.sparkSession.table(name)
 
 
-def running_user_totals(
-    events: DataFrame, timeout_minutes: int | None = None
-) -> DataFrame:
+def running_user_totals(events: DataFrame) -> DataFrame:
     """L7 arbitrary stateful op: per-user running event count + value
     sum via applyInPandasWithState.
 
-    ``timeout_minutes`` opts into ProcessingTimeTimeout state expiry
-    for long-lived continuous streams. Leave it None for
-    ``trigger(availableNow=True)`` runs: a processing-time timeout
-    keeps the availableNow query alive spinning on timeout-only
+    State never times out (NoTimeout): a ProcessingTimeTimeout keeps an
+    ``trigger(availableNow=True)`` query alive spinning on timeout-only
     invocations (observed: a 4 s job became a 10+ minute hang), since
     the trigger waits to drain timed-out state that keeps re-arming.
     """
@@ -131,7 +119,6 @@ def running_user_totals(
 
     out_schema = "user_id long, n_events long, total_value double"
     state_schema = "n long, total double"
-    use_timeout = timeout_minutes is not None
 
     def update(key, pdfs, state: GroupState):
         n, total = state.get if state.exists else (0, 0.0)
@@ -139,8 +126,6 @@ def running_user_totals(
             n += len(pdf)
             total += float(pdf["value"].sum())
         state.update((n, total))
-        if use_timeout:
-            state.setTimeoutDuration(timeout_minutes * 60 * 1000)
         yield pd.DataFrame(
             {"user_id": [key[0]], "n_events": [n], "total_value": [total]}
         )
@@ -152,11 +137,7 @@ def running_user_totals(
             outputStructType=out_schema,
             stateStructType=state_schema,
             outputMode="update",
-            timeoutConf=(
-                GroupStateTimeout.ProcessingTimeTimeout
-                if use_timeout
-                else GroupStateTimeout.NoTimeout
-            ),
+            timeoutConf=GroupStateTimeout.NoTimeout,
         )
     )
 
@@ -210,7 +191,6 @@ def streaming_extract(
     sink: SnapshotTable,
     checkpoint_dir: str,
     media_store: DataFrame | None = None,
-    salt: int | None = None,
 ):
     """L8: incremental extraction with an idempotent snapshot sink.
 
@@ -222,7 +202,7 @@ def streaming_extract(
     from ocr_tool_spark.plans.pipeline import extract_documents
 
     def commit(batch_df: DataFrame, batch_id: int) -> None:
-        out = extract_documents(batch_df, media_store, salt=salt)
+        out = extract_documents(batch_df, media_store)
         sink.append(out, batch_id=f"stream-{batch_id:08d}")
 
     return (

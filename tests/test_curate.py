@@ -39,7 +39,7 @@ def eval_docs(spark):
 
 def test_curate_drops_and_packs(spark, corpus, eval_docs):
     out = curate_corpus(
-        corpus, eval_docs, threshold=0.9, n=8, budget=30
+        corpus, eval_docs, threshold=0.9, budget=30
     )
     got = {r["doc_id"]: r for r in out.collect()}
     release_intermediates(out)

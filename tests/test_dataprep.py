@@ -135,8 +135,8 @@ def test_thumbnails_shape_and_determinism(spark):
 
     _, media_rows = fixtures.gen_corpus(10, seed=5)
     store = media_df(spark, media_rows)
-    t1 = {r.media_ref: r.thumbnail for r in media.thumbnails(store, size=8).collect()}
-    t2 = {r.media_ref: r.thumbnail for r in media.thumbnails(store, size=8).collect()}
+    t1 = {r.media_ref: r.thumbnail for r in media.thumbnails(store).collect()}
+    t2 = {r.media_ref: r.thumbnail for r in media.thumbnails(store).collect()}
     assert t1 == t2
     assert all(len(v) == 64 for v in t1.values())
 
@@ -149,7 +149,7 @@ def test_frame_sample_strides_pages(spark):
     multi = [m for m in media_rows if m["n_pages"] >= 3]
     assert multi, "fixture corpus should contain multi-page pdfs"
     store = media_df(spark, multi)
-    out = media.frame_sample(store, stride=2).collect()
+    out = media.frame_sample(store).collect()
     by_ref = {}
     for r in out:
         by_ref.setdefault(r.media_ref, []).append(r.page_idx)
@@ -289,21 +289,26 @@ def test_minhash_bucket_stats_surface_oversize(spark):
     assert all(r.max_size == 40 for r in stats)
 
 
-def test_ocr_glyph_cache_handles_unknown_crops(spark):
-    """The glyph crop cache must stay bounded and correct on inputs
-    full of unknown (non-template) ink patterns — noise pages produce
-    arbitrary crops that must neither crash nor evict known glyphs
-    into wrong answers."""
+def test_ocr_glyph_cache_handles_unknown_crops(spark, monkeypatch):
+    """The glyph cache must stay bounded and correct on inputs full of
+    unknown (non-template) ink patterns — noise pages produce arbitrary
+    crops that must neither crash nor evict known glyphs into wrong
+    answers. Every third column of the noise page is blank, so it splits
+    into ~20 distinct unknown ink runs; a fresh cache with a cap of 4
+    then overflows the cap, so the bound is actually exercised."""
     import numpy as np
 
     from ocr_tool_spark.functions import ocr
     from ocr_tool_spark.functions.glyphs import render_line
 
+    monkeypatch.setattr(ocr, "_CODE_CACHE", {})
+    monkeypatch.setattr(ocr, "_CODE_CACHE_MAX", 4)
     rng = np.random.default_rng(5)
     noise = (rng.random((40, 60)) < 0.35).astype(np.uint8) * 255
+    noise[:, ::3] = 0
     out_noise = ocr.read_media(noise.tobytes(), 60, 40, 1)
     assert isinstance(out_noise, str)  # unknown runs skipped, no crash
-    assert len(ocr._CROP_CACHE) <= ocr._CROP_CACHE_MAX
+    assert len(ocr._CODE_CACHE) <= 4
     line = render_line("HELLO 42")
     page = np.zeros((line.shape[0] + 4, line.shape[1] + 4), dtype=np.uint8)
     page[2 : 2 + line.shape[0], 2 : 2 + line.shape[1]] = line
@@ -703,7 +708,7 @@ def test_shingle_hash_sets_vectorized_distinct_matches_spec(spark):
         (4, "solo"),
     ]
     d = spark.createDataFrame(rows, "doc_id long, text string")
-    got = {r.doc_id: r._sh for r in dedup.shingle_hash_sets(d, k=3).collect()}
+    got = {r.doc_id: r._sh for r in dedup.shingle_hash_sets(d).collect()}
     for i, t in rows:
         # exact ORDER equality: ascending as uint64 (the kernel's sort
         # key), expressed through the int64 storage view
@@ -805,7 +810,7 @@ def test_shingle_hash_sets_randomized_differential(spark):
                 (i, " ".join(vocab[j] for j in rng.integers(0, len(vocab), n)))
             )
     d = spark.createDataFrame(rows, "doc_id long, text string")
-    got = {r.doc_id: r._sh for r in dedup.shingle_hash_sets(d, k=3).collect()}
+    got = {r.doc_id: r._sh for r in dedup.shingle_hash_sets(d).collect()}
     for i, t in rows:
         exp = (
             np.array(sorted(spec.shingle_hash_set(t, 3)), dtype=np.uint64)
