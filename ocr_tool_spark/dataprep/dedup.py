@@ -491,8 +491,7 @@ def adjacent_jaccard(docs: DataFrame) -> DataFrame:
 # --------------------------------------------- components / survivors
 
 
-# Round cap of the components loop: star-capped buckets keep pair-graph
-# diameters ~2, so real corpora converge in a handful of rounds.
+# round cap of the components loop (see pair_components)
 COMPONENT_ROUNDS = 25
 
 

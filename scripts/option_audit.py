@@ -3,11 +3,14 @@
 Parses every Python file of the repository (package, tests, perfbench,
 scripts, bin, bench.py, __spark_entry__.py), maps each call's positional
 and keyword arguments onto the signature of the package function it
-resolves to, and prints one line per defaulted parameter:
+resolves to, and prints one line per defaulted parameter that no call
+sets to a second value:
 
     UNSET   no call passes a value other than the default
     ONE     every call passes the same non-default value
-    SET     at least two values are in use
+
+The last line counts every defaulted parameter, including those with
+at least two values in use (SET).
 
 A bare name that is a parameter of the enclosing package function
 forwards that parameter's values, so a column name threaded from
@@ -18,8 +21,7 @@ through the file's imports of the package; a method call on any other
 object matches every package method of that name. Run from the
 repository root:
 
-    python scripts/option_audit.py            # every defaulted parameter
-    python scripts/option_audit.py --unset    # UNSET and ONE only
+    python scripts/option_audit.py
 """
 
 from __future__ import annotations
@@ -209,7 +211,7 @@ def scan_calls(root: Path, defs: dict[str, dict[str, Def]]) -> None:
         visit(tree, None)
 
 
-def main(argv: list[str]) -> int:
+def main() -> int:
     root = Path(__file__).resolve().parent.parent
     defs = collect_defs(root)
     scan_calls(root, defs)
@@ -222,7 +224,7 @@ def main(argv: list[str]) -> int:
             seen.add(id(d))
             for status, name, default, used in d.report():
                 counts[status] += 1
-                if "--unset" in argv and status not in ("UNSET", "ONE"):
+                if status == "SET":
                     continue
                 print(f"{status:5} {mod}.{q}({name}={default}) calls={d.calls} values={used}")
     print(f"# defaulted parameters: {sum(counts.values())} "
@@ -231,4 +233,4 @@ def main(argv: list[str]) -> int:
 
 
 if __name__ == "__main__":
-    sys.exit(main(sys.argv[1:]))
+    sys.exit(main())

@@ -11,9 +11,10 @@ built into `--inputs` on first use, and the driver test tables (the
 `<name>.parquet` files of one scale factor) at `--sf`.
 Plans cover `extract_documents(docs, media, salt=8)`,
 `curate_corpus(docs, eval, threshold=0.6, budget=2048)` and the driver
-keys named by `--keys`. Expression ids, plan ids and lambda variable
-names are numbered per session, so they are normalized away; two
-sessions over the same code print the same text.
+window keys `q_tumbling`, `q_sliding` and `q_session_window`.
+Expression ids, plan ids and lambda variable names are numbered per
+session, so they are normalized away; two sessions over the same code
+print the same text.
 """
 
 from __future__ import annotations
@@ -42,7 +43,6 @@ def main(argv: list[str]) -> int:
     ap.add_argument("--repo", default=HERE)
     ap.add_argument("--inputs", default=os.path.join(HERE, "perfbench", ".work", "inputs"))
     ap.add_argument("--sf", required=True)
-    ap.add_argument("--keys", default="q_tumbling,q_sliding,q_session_window")
     args = ap.parse_args(argv)
 
     sys.path[:0] = [os.path.abspath(args.repo), os.path.join(HERE, "perfbench")]
@@ -68,7 +68,7 @@ def main(argv: list[str]) -> int:
         "curate_corpus": lambda: curate_corpus(cdocs, ceval, threshold=0.6, budget=2048),
     }
     qs = driver_queries.queries()
-    for key in filter(None, args.keys.split(",")):
+    for key in ("q_tumbling", "q_sliding", "q_session_window"):
         frames[key] = lambda key=key: qs[key](spark, args.sf)
     for name, make in frames.items():
         plan = make()._jdf.queryExecution().optimizedPlan().toString()  # noqa: SLF001

@@ -22,31 +22,35 @@ from ocr_tool_spark.dataprep.dedup import _P, tokens
 from ocr_tool_spark.operators.parallelism import ensure_parallelism_floor
 
 
-def shingles(c: Column, k: int = 3) -> Column:
-    """Distinct word k-shingles as strings ('w1 w2 w3')."""
+# Written out independently of the kernels they check: these mirror
+# dedup.SHINGLE_K and dedup.NUM_HASHES.
+K = 3
+NUM_HASHES = 32
+
+
+def shingles(c: Column) -> Column:
+    """Distinct word K-shingles as strings ('w1 w2 w3')."""
     t = tokens(c)
     n = F.size(t)
     return F.array_distinct(
         F.when(
-            n >= k,
+            n >= K,
             F.transform(
-                F.sequence(F.lit(0), n - k),
-                lambda i: F.concat_ws(" ", F.slice(t, i + 1, k)),
+                F.sequence(F.lit(0), n - K),
+                lambda i: F.concat_ws(" ", F.slice(t, i + 1, K)),
             ),
         ).otherwise(F.array(F.concat_ws(" ", t)))
     )
 
 
-def minhash_signatures(
-    docs: DataFrame, text_col: str = "text", num_hashes: int = 32, k: int = 3
-) -> DataFrame:
-    """(doc_id, _sh: distinct shingles, sig: array of num_hashes mins).
+def minhash_signatures(docs: DataFrame) -> DataFrame:
+    """(doc_id, _sh: distinct shingles, sig: array of NUM_HASHES mins).
 
     Three projection steps so each expensive expression is evaluated
     exactly ONCE per row: shingle construction, then xxhash64 of every
-    shingle, then the num_hashes universal-hash min-folds as pure
+    shingle, then the NUM_HASHES universal-hash min-folds as pure
     integer arithmetic over the materialized hash array. (Inlining the
-    shingle expression into every lane re-evaluates it num_hashes
+    shingle expression into every lane re-evaluates it NUM_HASHES
     times — measured 30x slower.)"""
     def lane(i: int) -> Column:
         a, b = 2 * i + 1, 0x9E3779B9 * (i + 1) & 0x7FFFFFFF
@@ -55,12 +59,12 @@ def minhash_signatures(
         )
 
     return (
-        docs.select("doc_id", shingles(F.col(text_col), k).alias("_sh"))
+        docs.select("doc_id", shingles(F.col("text")).alias("_sh"))
         .withColumn(
             "_hs", F.transform("_sh", lambda s: F.pmod(F.xxhash64(s), F.lit(_P)))
         )
         .select(
-            "doc_id", "_sh", F.array(*[lane(i) for i in range(num_hashes)]).alias("sig")
+            "doc_id", "_sh", F.array(*[lane(i) for i in range(NUM_HASHES)]).alias("sig")
         )
     )
 
@@ -81,23 +85,15 @@ def word_ngrams(c: Column, n: int) -> Column:
     )
 
 
-def contamination_sql(
-    docs: DataFrame,
-    eval_docs: DataFrame,
-    n: int = 8,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    eval_text_col: str | None = None,
-) -> DataFrame:
+def contamination_sql(docs: DataFrame, eval_docs: DataFrame, n: int = 8) -> DataFrame:
     """decontam.contamination as a pure-JVM plan: distinct eval grams as
     the build side of one broadcast hash join probed by the scan-local
     exploded corpus grams (hash table built once per task), per-doc
     count collapsed map-side to ~1 row/doc before the only
     corpus-cardinality shuffle — the plan a SQL-only engine would run
     and the direct mirror of the driver oracle."""
-    ev_col = eval_text_col or text_col
     ev = (
-        eval_docs.select(F.explode(word_ngrams(F.col(ev_col), n)).alias("gram"))
+        eval_docs.select(F.explode(word_ngrams(F.col("text"), n)).alias("gram"))
         .distinct()
         .withColumn("_hit", F.lit(1))
     )
@@ -106,11 +102,11 @@ def contamination_sql(
     # it, so spread by compute, not bytes (min_bytes=0)
     par = docs.sparkSession.sparkContext.defaultParallelism
     doc_grams = ensure_parallelism_floor(docs, par).select(
-        id_col, F.explode_outer(word_ngrams(F.col(text_col), n)).alias("gram")
+        "doc_id", F.explode_outer(word_ngrams(F.col("text"), n)).alias("gram")
     )
     return (
         doc_grams.join(F.broadcast(ev), "gram", "left")
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(
             F.coalesce(F.sum("_hit"), F.lit(0))
             .cast("long")
